@@ -28,22 +28,11 @@ object GraphAlgorithms {
     withoutConstraintPropagation(nf.edges) {
     val sym = nf.symmetrizedEdges
     val e = sym.distinct().localCheckpointCapped()
-
-    var labels = nf.nodes.select(col("id"), col("id").as("component")).localCheckpointCapped()
-    // Convergence probe: labels are node ids and only ever DECREASE
-    // pointwise (least() in the propagation, label(label) <= label in the
-    // doubling), so the exact DECIMAL label sum is strictly decreasing
-    // until the fixpoint — sum equality <=> pointwise equality. One cheap
-    // aggregate over the just-checkpointed frame replaces the former
-    // join-the-previous-round changed-row probe: one fewer join shuffle
-    // per round (guide §2.4), identical round count and output. Non-numeric
-    // (string-id) graphs keep the join probe.
-    val sumProbe = numericCol(labels, "component")
-    var prevSum: Option[java.math.BigDecimal] =
-      if (sumProbe) monotoneSum(labels, "component") else None
-    var converged = false
-    var rounds = 0
-    while (!converged && rounds < 200) {
+    // labels are node ids and only ever DECREASE pointwise (least() in the
+    // propagation, label(label) <= label in the doubling): a monotone
+    // fixpoint, probed by the label sum
+    val init = nf.nodes.select(col("id"), col("id").as("component")).localCheckpointCapped()
+    monotoneFixpoint("componentLabels", init, Seq("id"), "component", 200) { (labels, round) =>
       // every node receives the min label of its in-neighbors; keep the min
       // of own and received. Join-based (not union+groupBy): same single
       // shuffle, and it avoids a Catalyst Union-constraint-rewrite bug that
@@ -65,7 +54,7 @@ object GraphAlgorithms {
           .select(col("id"),
             least(col("component"), coalesce(col("mc"), col("component"))).as("component"))
       }
-      val prop = (if (rounds == 0) hop(labels) else hop(hop(labels)))
+      val prop = (if (round == 0) hop(labels) else hop(hop(labels)))
         .localCheckpointCapped()
       // pointer doubling: follow the label chain one extra step
       // (label(v) <- label(label(v))). Labels are themselves node ids and
@@ -76,29 +65,13 @@ object GraphAlgorithms {
       // (Eliding this checkpoint in favor of ReuseExchange inside `next`'s
       // plan was measured and is NOT a win at sf0.1: 3-run means were flat
       // on q_percolation and ~8% worse on q_components.)
-      val next = prop.as("a")
+      prop.as("a")
         .join(prop.select(col("id").as("cid"), col("component").as("c2")).as("b"),
           col("a.component") === col("cid"), "left_outer")
         .select(col("a.id").as("id"),
           coalesce(col("c2"), col("a.component")).as("component"))
         .localCheckpointCapped()
-      val curSum = if (sumProbe) monotoneSum(next, "component") else None
-      (prevSum, curSum) match {
-        case (Some(p), Some(c)) => converged = c.compareTo(p) == 0
-        case _ =>
-          // string-id graph, or a decimal-overflow round (None): exact
-          // changed-row join probe
-          converged = next.join(
-              labels.withColumnRenamed("component", "prev"), Seq("id"))
-            .filter(col("component") =!= col("prev"))
-            .limit(1).count() == 0
-      }
-      prevSum = curSum
-      labels = next
-      rounds += 1
     }
-    System.err.println(s"[graft] componentLabels converged in $rounds rounds")
-    labels
     }
   }
 
@@ -167,37 +140,80 @@ object GraphAlgorithms {
     }
   }
 
-  /** Exact DECIMAL(38,0) sum of `c` — the convergence probe for fixpoints
-    * whose per-node state moves MONOTONICALLY (component labels only
-    * decrease, SCC colors only increase): the sum changes iff any row
-    * changed, so comparing successive sums detects the fixpoint with one
-    * aggregate job over the just-checkpointed frame instead of a join
-    * against the previous round (guide §2.4 — remove shuffles outright).
-    * Empty frames sum as 0. A NULL sum over a NON-empty frame is a
-    * DECIMAL(38,0) overflow (non-ANSI Spark returns null) — returned as
-    * None so callers fall back to the exact join probe for that round
-    * instead of comparing ZERO == ZERO and forging convergence (round-16
-    * verdict item: unreachable below ~1e19 row-weighted ids, but the
-    * probe's whole point is 100 TB posture and the failure is silent).
+  /** The one driver of the monotone fixpoints: component labels (only
+    * decrease), SCC colors (only increase) and temporal arrivals (rows only
+    * added, arrivals only decrease). Starting from `init`, runs
+    * `cycle(current, round)` — which returns the next, already materialized
+    * frame — until a round changes nothing, and returns the fixpoint.
+    *
+    * Convergence probe: when `monotone` is integral, one aggregate job of
+    * (row count, exact DECIMAL(38,0) sum) over the just-checkpointed frame.
+    * Under monotone movement the pair is stationary iff no row changed, so
+    * the probe replaces a join against the previous round (guide §2.4 —
+    * remove shuffles outright). Everything else — non-integral columns
+    * (see [[integralCol]]) and rounds whose sum overflowed — takes the exact
+    * changed-row join over `keys`.
+    *
+    * A loop still changing after `maxRounds` rounds throws instead of
+    * returning a half-converged answer as if it were final.
     */
-  private[graft] def monotoneSum(df: DataFrame, c: String):
-      Option[java.math.BigDecimal] = {
-    val r = df.agg(sum(col(c).cast("decimal(38,0)")).as("s"),
-      count(lit(1)).as("n")).head
-    val v = r.getDecimal(0)
-    if (v == null && r.getLong(1) > 0L) None
-    else Some(if (v == null) java.math.BigDecimal.ZERO else v)
+  private def monotoneFixpoint(name: String, init: DataFrame, keys: Seq[String],
+                               monotone: String, maxRounds: Int)
+                              (cycle: (DataFrame, Int) => DataFrame): DataFrame = {
+    val probe: DataFrame => Option[(Long, Option[java.math.BigDecimal])] =
+      if (integralCol(init, monotone)) df => Some(monotoneProbe(df, monotone))
+      else _ => None
+    var cur = init
+    var prevState = probe(cur)
+    var converged = false
+    var rounds = 0
+    while (!converged) {
+      if (rounds >= maxRounds) throw new IllegalStateException(
+        s"$name did not converge within $maxRounds rounds")
+      val next = cycle(cur, rounds)
+      val state = probe(next)
+      converged = (prevState, state) match {
+        case (Some((n0, _)), Some((n1, _))) if n0 != n1 => false
+        case (Some((_, Some(s0))), Some((_, Some(s1)))) => s0.compareTo(s1) == 0
+        case _ =>
+          next.join(cur.withColumnRenamed(monotone, "prev"), keys, "left_outer")
+            .filter(!(col(monotone) <=> col("prev"))).limit(1).count() == 0
+      }
+      prevState = state
+      cur = next
+      rounds += 1
+    }
+    System.err.println(s"[graft] $name converged in $rounds rounds")
+    cur
   }
 
-  /** The sum probe only applies to INTEGRAL label types — string-id graphs
-    * keep the join-the-previous-round changed-row probe, and so do
-    * fractional-numeric ids (Double/Float/scaled Decimal): the probe casts
-    * to decimal(38,0), which ROUNDS, so a pointwise decrease smaller than
-    * the rounding granularity (2.4 -> 2.0, both cast to 2) would leave the
-    * sum stationary and forge convergence mid-fixpoint. Same gate as the
-    * MST driver-contraction path (truncate-and-collide hazard).
+  /** (row count, exact DECIMAL(38,0) sum of `c`) in one aggregate job — the
+    * state [[monotoneFixpoint]] compares between rounds. Empty frames sum
+    * as 0. The sum is `try_sum`, so an overflow is NULL under ANSI mode
+    * too (plain `sum` throws ARITHMETIC_OVERFLOW there); a NULL sum over a
+    * non-empty frame comes back as None — unusable, so the caller takes the
+    * exact join probe that round instead of comparing ZERO == ZERO and
+    * forging convergence.
     */
-  private[graft] def numericCol(df: DataFrame, c: String): Boolean =
+  private[graft] def monotoneProbe(df: DataFrame, c: String):
+      (Long, Option[java.math.BigDecimal]) = {
+    val r = df.agg(count(lit(1)).as("n"),
+      try_sum(col(c).cast("decimal(38,0)")).as("s")).head
+    val n = r.getLong(0)
+    val v = r.getDecimal(1)
+    (n, if (v == null && n > 0L) None
+        else Some(if (v == null) java.math.BigDecimal.ZERO else v))
+  }
+
+  /** The sum probe only applies to INTEGRAL column types — string ids keep
+    * the changed-row join probe, and so do fractional-numeric ids
+    * (Double/Float/scaled Decimal): the probe casts to decimal(38,0), which
+    * ROUNDS, so a pointwise decrease smaller than the rounding granularity
+    * (2.4 -> 2.0, both cast to 2) would leave the sum stationary and forge
+    * convergence mid-fixpoint. Same gate as the MST driver-contraction path
+    * (truncate-and-collide hazard).
+    */
+  private def integralCol(df: DataFrame, c: String): Boolean =
     df.schema(c).dataType match {
       case org.apache.spark.sql.types.ByteType
          | org.apache.spark.sql.types.ShortType
@@ -205,6 +221,11 @@ object GraphAlgorithms {
          | org.apache.spark.sql.types.LongType => true
       case _ => false
     }
+
+  private[graft] def monotoneSum(df: DataFrame, c: String):
+      Option[java.math.BigDecimal] = monotoneProbe(df, c)._2
+
+  private[graft] def numericCol(df: DataFrame, c: String): Boolean = integralCol(df, c)
 
   /** Max-id propagation to fixpoint: each node's `color` converges to the
     * largest node id that reaches it along `edges` (including itself).

@@ -128,6 +128,29 @@ class GraphAlgorithmsSpec extends AnyFunSuite with SparkFixture {
     assert(pr(3L) < base / 5) // ~0.15 * base
   }
 
+  test("monotoneProbe reports an overflowed sum as unusable in both ANSI modes") {
+    // ids of at most 64 bits need more than 1e19 rows to overflow the
+    // DECIMAL(38,0) sum, so the probe is driven directly: two 9e37 values
+    // sum past 1e38. Plain `sum` throws ARITHMETIC_OVERFLOW under ANSI
+    // mode (the Spark 4 default); the probe must return None instead, so
+    // the fixpoint takes the exact join probe that round
+    val df = spark.range(2)
+      .select(lit("9" + "0" * 37).cast("decimal(38,0)").as("v"))
+    val key = "spark.sql.ansi.enabled"
+    val saved = spark.conf.getOption(key)
+    try {
+      for (ansi <- Seq("true", "false")) {
+        spark.conf.set(key, ansi)
+        assert(GraphAlgorithms.monotoneProbe(df, "v") == (2L -> None), s"ansi=$ansi")
+      }
+    } finally saved match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+    assert(GraphAlgorithms.monotoneProbe(df.limit(0), "v") ==
+      (0L -> Some(java.math.BigDecimal.ZERO)))
+  }
+
   test("entry returns rows on sf0.001") {
     assert(SparkEntry.entry(spark).count() > 0L)
   }
