@@ -243,18 +243,11 @@ object GraphAlgorithms {
     */
   private def maxColorFixpoint(edges: DataFrame, nodes: DataFrame,
                                doublingAfter: Int, tag: String): DataFrame = {
-    var colors = nodes.select(col("id"), col("id").as("color")).localCheckpointCapped()
-    // colors only ever INCREASE pointwise, so the exact color sum is
-    // strictly increasing until the fixpoint — same aggregate probe as
-    // componentLabels, one join shuffle per round removed (string-id
-    // graphs keep the join probe)
-    val sumProbe = numericCol(colors, "color")
-    var prevSum: Option[java.math.BigDecimal] =
-      if (sumProbe) monotoneSum(colors, "color") else None
-    var stable = false
-    var rounds = 0
-    while (!stable) {
-      val next = if (rounds < doublingAfter) {
+    val init = nodes.select(col("id"), col("id").as("color")).localCheckpointCapped()
+    // colors only ever INCREASE pointwise: a monotone fixpoint, probed by
+    // the color sum like componentLabels
+    monotoneFixpoint(s"scc $tag coloring", init, Seq("id"), "color", 200) { (colors, round) =>
+      if (round < doublingAfter) {
         // single hop per cycle, deliberately: chaining a second hop here
         // (as componentLabels does) was measured in round 16 to save only
         // ONE cycle (11 -> 10, the doubling rounds already compress the
@@ -282,19 +275,7 @@ object GraphAlgorithms {
             greatest(col("a.color"), coalesce(col("c2"), col("a.color"))).as("color"))
           .localCheckpointCapped()
       }
-      val curSum = if (sumProbe) monotoneSum(next, "color") else None
-      (prevSum, curSum) match {
-        case (Some(p), Some(c)) => stable = c.compareTo(p) == 0
-        case _ =>
-          stable = next.join(colors.withColumnRenamed("color", "prev"), Seq("id"))
-            .filter(col("color") =!= col("prev")).limit(1).count() == 0
-      }
-      prevSum = curSum
-      colors = next
-      rounds += 1
     }
-    System.err.println(s"[graft] scc $tag coloring converged in $rounds rounds")
-    colors
   }
 
   def strongComponentLabels(nf: NetworkFrame,
