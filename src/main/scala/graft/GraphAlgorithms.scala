@@ -222,11 +222,6 @@ object GraphAlgorithms {
       case _ => false
     }
 
-  private[graft] def monotoneSum(df: DataFrame, c: String):
-      Option[java.math.BigDecimal] = monotoneProbe(df, c)._2
-
-  private[graft] def numericCol(df: DataFrame, c: String): Boolean = integralCol(df, c)
-
   /** Max-id propagation to fixpoint: each node's `color` converges to the
     * largest node id that reaches it along `edges` (including itself).
     * Runs `doublingAfter` plain one-shuffle rounds first — a round-4 solo
@@ -2295,9 +2290,11 @@ object GraphAlgorithms {
     * "back in time"). Seeds start at arrival -1 so any first edge
     * qualifies. The fixpoint relaxes all seeds simultaneously — state is
     * (seed, id, arrival), one time-filtered join + one min aggregation per
-    * round, checkpointed flat like every other fixpoint here. Arrivals
+    * relaxation, checkpointed flat like every other fixpoint here. Arrivals
     * only decrease and new nodes only appear, so convergence is monotone;
-    * rounds are bounded by the temporal diameter.
+    * rounds are bounded by the temporal diameter. `maxRounds` caps the
+    * three-relaxation cycles; a reach set still growing after that many
+    * cycles throws instead of returning a partial answer.
     */
   def temporalReachability(edges: DataFrame, seeds: DataFrame,
                            maxRounds: Int = 30): DataFrame =
@@ -2305,28 +2302,14 @@ object GraphAlgorithms {
     val e = edges.select(col("source"), col("target"),
         col("t").cast("long").as("t"))
       .distinct().transform(flatCheckpoint)
-    var arr = seeds.select(col("id").as("seed"), col("id"),
+    val init = seeds.select(col("id").as("seed"), col("id"),
         lit(-1L).as("arrival"))
       .transform(flatCheckpoint)
-    // convergence probe: (seed,id) rows are only ever ADDED and arrivals
-    // only ever DECREASE (min), so the (row count, exact arrival sum) pair
-    // is stationary iff the relaxation changed nothing — one aggregate job
-    // replaces the former full-outer changed-row join per double-round
-    // a NULL sum over a non-empty frame is a DECIMAL(38,0) overflow
-    // (returned as None): the probe is unusable that round, so the loop
-    // conservatively keeps relaxing instead of comparing ZERO == ZERO
-    def reachState(df: DataFrame): (Long, Option[java.math.BigDecimal]) = {
-      val r = df.agg(count(lit(1)).as("n"),
-        sum(col("arrival").cast("decimal(38,0)")).as("s")).head
-      val v = r.getDecimal(1)
-      val s = if (v == null && r.getLong(0) > 0L) None
-        else Some(if (v == null) java.math.BigDecimal.ZERO else v)
-      (r.getLong(0), s)
-    }
-    var prevState = reachState(arr)
-    var done = false
-    var rounds = 0
-    while (!done && rounds < maxRounds) {
+    // (seed,id) rows are only ever ADDED and arrivals only ever DECREASE
+    // (min): the driver's (row count, arrival sum) probe is stationary iff
+    // the relaxation changed nothing
+    monotoneFixpoint("temporalReachability", init, Seq("seed", "id"), "arrival",
+        maxRounds) { (arr, _) =>
       // three relaxations per materialization + convergence probe: the
       // relaxation plan is join-linear in `arr` (no self-join), so chained
       // steps cost no lineage blowup, and each probe is a full job
@@ -2347,18 +2330,8 @@ object GraphAlgorithms {
               coalesce(col("cand"), col("arrival"))).as("arrival"))
         k += 1
       }
-      arr = flatCheckpoint(cur)
-      val curState = reachState(arr)
-      done = curState._1 == prevState._1 &&
-        ((prevState._2, curState._2) match {
-          case (Some(p), Some(c)) => c.compareTo(p) == 0
-          case _ => false
-        })
-      prevState = curState
-      rounds += 1
+      flatCheckpoint(cur)
     }
-    System.err.println(s"[graft] temporalReachability converged in $rounds triple-relaxation cycles")
-    arr
   }
 
   /** Katz centrality, quantized: x' = base + (alphaNum * A^T x) DIV alphaDen

@@ -151,6 +151,20 @@ class GraphAlgorithmsSpec extends AnyFunSuite with SparkFixture {
       (0L -> Some(java.math.BigDecimal.ZERO)))
   }
 
+  test("temporalReachability throws when it reaches its round cap") {
+    // time-ordered path 0 -t=1-> 1 -t=2-> ... -t=6-> 6: six relaxations,
+    // so more than one three-relaxation cycle before the reach set is final
+    val edges = (0L until 6L).map(i => (i, i + 1, i + 1)).toDF("source", "target", "t")
+    val seeds = Seq(0L).map(Tuple1(_)).toDF("id")
+    val err = intercept[IllegalStateException](
+      GraphAlgorithms.temporalReachability(edges, seeds, maxRounds = 1).collect())
+    assert(err.getMessage.contains("temporalReachability") &&
+      err.getMessage.contains("1 rounds"), err.getMessage)
+    val full = GraphAlgorithms.temporalReachability(edges, seeds)
+      .collect().map(r => r.getLong(1) -> r.getLong(2)).toMap
+    assert(full == (0L to 6L).map(i => i -> (if (i == 0L) -1L else i)).toMap)
+  }
+
   test("entry returns rows on sf0.001") {
     assert(SparkEntry.entry(spark).count() > 0L)
   }
