@@ -502,68 +502,30 @@ object GraphAlgorithms {
     nf.copy(nodes = n, edges = induce(nf.edges, reached))
   }
 
-  /** Single-source BFS: ids reachable within <= maxHops (seed at hop 0).
-    * One semi-join-driven frontier expansion per round; stops when the
-    * frontier is empty or maxHops reached.
-    */
+  /** Single-source BFS: ids reachable within <= maxHops (seed at hop 0). */
   private def bfsReachable(nf: NetworkFrame, nodeId: Any, directed: Boolean,
-                           maxHops: Int): DataFrame = withoutConstraintPropagation(nf.edges) {
-    val e0 = if (directed) nf.edges.select(col("source"), col("target"))
-             else nf.symmetrizedEdges
-    val e = e0.distinct().localCheckpointCapped()
-    var visited = nf.nodes.select(col("id")).filter(col("id") === lit(nodeId))
-      .localCheckpointCapped()
-    var frontier = visited
-    var hops = 0
-    var done = frontier.isEmpty
-    while (!done && hops < maxHops) {
-      val next = e.join(frontier.withColumnRenamed("id", "source"), Seq("source"), "left_semi")
-        .select(col("target").as("id")).distinct()
-        .join(visited, Seq("id"), "left_anti")
-        .localCheckpointCapped()
-      if (next.isEmpty) done = true
-      else {
-        visited = visited.union(next).localCheckpointCapped()
-        frontier = next
-      }
-      hops += 1
-    }
-    visited
-  }
+                           maxHops: Int): DataFrame =
+    bfsDistances(nf, nodeId, maxHops, directed).select("id")
 
   /** Single-source hop distances: (id, dist) for every node within
     * <= maxDepth unweighted hops of `nodeId` (seed at 0) — the distance
     * table `select_component_from_node` computes and then discards
-    * (networkframe.py:990-996, scipy shortest_path). A node's first
-    * discovery round IS its hop distance, so this is bfsReachable's frontier
-    * expansion with the round number stamped on: O(depth) rounds, one
-    * shuffle each, frontier-sized state — no dense distance matrix.
+    * (networkframe.py:990-996, scipy shortest_path). The one-seed
+    * [[frontierBfs]]: O(depth) rounds, one shuffle each, frontier-sized
+    * state — no dense distance matrix.
     */
   def bfsDistances(nf: NetworkFrame, nodeId: Any, maxDepth: Int,
-                   directed: Boolean = false): DataFrame = withoutConstraintPropagation(nf.edges) {
+                   directed: Boolean = false): DataFrame = {
     require(maxDepth >= 0, "maxDepth must be non-negative")
-    val e0 = if (directed) nf.edges.select(col("source"), col("target"))
-             else nf.symmetrizedEdges
-    val e = e0.distinct().localCheckpointCapped()
-    var dist = nf.nodes.select(col("id")).filter(col("id") === lit(nodeId))
-      .withColumn("dist", lit(0L)).localCheckpointCapped()
-    var frontier = dist.select("id")
-    var hops = 0
-    var done = frontier.isEmpty
-    while (!done && hops < maxDepth) {
-      val next = e.join(frontier.withColumnRenamed("id", "source"), Seq("source"), "left_semi")
-        .select(col("target").as("id")).distinct()
-        .join(dist.select("id"), Seq("id"), "left_anti")
-        .localCheckpointCapped()
-      if (next.isEmpty) done = true
-      else {
-        dist = dist.union(next.withColumn("dist", lit(hops + 1L))).localCheckpointCapped()
-        frontier = next
-      }
-      hops += 1
-    }
-    dist
+    val seed = nf.nodes.select(col("id")).filter(col("id") === lit(nodeId))
+    frontierBfs(bfsEdges(nf, directed), seed, maxDepth)
+      .select(col("id"), col("d").as("dist"))
   }
+
+  /** The distinct BFS edge set: directed as stored, or symmetrized. */
+  private def bfsEdges(nf: NetworkFrame, directed: Boolean): DataFrame =
+    (if (directed) nf.edges.select(col("source"), col("target")) else nf.symmetrizedEdges)
+      .distinct()
 
   /** Community detection by synchronous label propagation, made
     * deterministic: each round every node adopts the most frequent label
@@ -1078,12 +1040,23 @@ object GraphAlgorithms {
     * loop, not k.
     */
   def multiSourceBfsDistances(nf: NetworkFrame, k: Int = 8,
-                              maxDepth: Int = 12): DataFrame =
-      withoutConstraintPropagation(nf.edges) {
+                              maxDepth: Int = 12): DataFrame = {
     require(k >= 1 && maxDepth >= 1, "need at least one seed and one hop")
-    val e = nf.symmetrizedEdges.distinct().localCheckpointCapped()
-    var dist = nf.nodes.select(col("id")).orderBy("id").limit(k)
-      .select(col("id").as("seed"), col("id"), lit(0L).as("d"))
+    frontierBfs(bfsEdges(nf, directed = false),
+      nf.nodes.select(col("id")).orderBy("id").limit(k), maxDepth)
+  }
+
+  /** The one frontier BFS: distances (seed, id, d) from every `seeds` id
+    * along `edges` (source -> target), within <= maxDepth hops (seeds at
+    * 0). A node's first discovery round IS its hop distance. Per round one
+    * join shuffle over the combined frontier plus one anti-join against
+    * the visited set; stops when the frontier is empty or maxDepth is
+    * reached.
+    */
+  private def frontierBfs(edges: DataFrame, seeds: DataFrame, maxDepth: Int): DataFrame =
+      withoutConstraintPropagation(edges) {
+    val e = edges.localCheckpointCapped()
+    var dist = seeds.select(col("id").as("seed"), col("id"), lit(0L).as("d"))
       .localCheckpointCapped()
     var frontier = dist
     var hops = 0
