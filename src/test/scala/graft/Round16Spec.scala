@@ -107,5 +107,22 @@ class Round16Spec extends AnyFunSuite with SparkFixture {
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(scc == Map("A" -> "A", "B" -> "A", "C" -> "A",
       "D" -> "D", "E" -> "E"))
+
+    // fractional ids take the join probe too: on a Double-id cycle
+    // 2.40 -> 2.39 -> ... -> 2.00 -> 2.40 every label moves by less than
+    // 0.5 per round, so a sum probe cast to DECIMAL(38,0) (every id rounds
+    // to 2) would stop after the first round with labels still far from
+    // the fixpoint. The 41-node cycle is also deeper than the backward
+    // frontier cap, so the SCC backward coloring runs as well
+    val ids = (0 to 40).map(i => (200 + i) / 100.0)
+    val dNodes = ids.toDF("id")
+    val dEdges = ids.indices.map(i => (ids(i), ids((i + 40) % 41))).toDF("source", "target")
+    val dg = NetworkFrame(dNodes, dEdges)
+    val dWeak = GraphAlgorithms.componentLabels(dg, "weak")
+      .collect().map(r => r.getDouble(0) -> r.getDouble(1)).toMap
+    assert(dWeak == ids.map(_ -> 2.0).toMap)
+    val dScc = GraphAlgorithms.strongComponentLabels(dg)
+      .collect().map(r => r.getDouble(0) -> r.getDouble(1)).toMap
+    assert(dScc == ids.map(_ -> 2.0).toMap)
   }
 }
