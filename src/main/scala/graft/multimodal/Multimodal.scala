@@ -62,6 +62,14 @@ object Multimodal {
     } else None
   }
 
+  /** The payload as a JDK-decodable image, or None when no ImageIO codec
+    * reads it (unknown format, truncated or corrupt data). Only non-fatal
+    * errors count as undecodable: out-of-memory and interrupts propagate.
+    */
+  private def readImage(bytes: Array[Byte]): Option[java.awt.image.BufferedImage] =
+    try Option(javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes)))
+    catch { case scala.util.control.NonFatal(_) => None }
+
   // ------------------------------------------------------------------ STUBS
   // STUB: deterministic fake decode for payloads that are not PNG/BMP. A
   // real implementation would hand other formats to a codec library; this
@@ -96,10 +104,7 @@ object Multimodal {
     ds.mapPartitions { it =>
       it.grouped(batchSize).flatMap { batch =>
         batch.map { r =>
-          val img =
-            try Option(javax.imageio.ImageIO.read(
-              new java.io.ByteArrayInputStream(r.media)))
-            catch { case _: Throwable => None }
+          val img = readImage(r.media)
           val (w, h, c, f) = img match {
             case Some(im) =>
               val raster = im.getRaster
@@ -162,10 +167,7 @@ object Multimodal {
     ds.mapPartitions { it =>
       it.grouped(batchSize).flatMap { batch =>
         batch.map { r =>
-          val img =
-            try Option(javax.imageio.ImageIO.read(
-              new java.io.ByteArrayInputStream(r.media)))
-            catch { case _: Throwable => None }
+          val img = readImage(r.media)
           img match {
             case Some(im) =>
               val raster = im.getRaster
@@ -214,10 +216,7 @@ object Multimodal {
     ds.mapPartitions { it =>
       it.grouped(batchSize).flatMap { batch =>
         batch.map { r =>
-          val img =
-            try Option(javax.imageio.ImageIO.read(
-              new java.io.ByteArrayInputStream(r.media)))
-            catch { case _: Throwable => None }
+          val img = readImage(r.media)
           img match {
             case Some(im) =>
               val raster = im.getRaster
