@@ -26,108 +26,6 @@ object Plans {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    if (what == "r16jp") {
-      // stage dissection of jaccardPrefixPairs (round-16 optimization):
-      // replicate the operator's internals with a timed count per stage
-      import org.apache.spark.sql.expressions.Window
-      import graft.functions.TextAnalysis
-      import org.apache.spark.sql.graftext.CappedCheckpoint._
-      val docs = spark.read.parquet(s"$dir/documents.parquet")
-      val tau = 0.5
-      val sets = docs.select(col("doc_id").as("id"),
-          TextAnalysis.shingles(col("text"), 3).as("shs"))
-        .withColumn("sz", size(col("shs")))
-        .filter(col("sz") > 0)
-      t("sets ckpt")({ val c = sets.localCheckpointCapped(); c.count() })
-      val setsC = sets.localCheckpointCapped()
-      val sh = setsC.select(col("id"), col("sz"), explode(col("shs")).as("shingle"))
-      t("sh explode")(sh.count())
-      val dfreq = sh.groupBy("shingle").agg(count(lit(1)).as("df"))
-      t("dfreq")(dfreq.count())
-      val prefix0 = sh.join(dfreq, Seq("shingle"))
-        .withColumn("rk",
-          row_number().over(Window.partitionBy("id").orderBy("df", "shingle")))
-        .filter(col("rk") <= col("sz") - ceil(lit(tau) * col("sz")) + 1)
-        .select(col("id"), col("shingle"), col("rk"), col("sz"))
-      t("prefix ckpt")({ val p = prefix0.localCheckpointCapped(); p.count() })
-      val prefix = prefix0.localCheckpointCapped()
-      val eps = 1e-9
-      val cand = prefix.as("a").join(prefix.as("b"),
-          col("a.shingle") === col("b.shingle") && col("a.id") < col("b.id") &&
-            (lit(1.0) + tau) * least(col("a.sz"), col("b.sz")) >=
-              lit(tau) * (col("a.sz") + col("b.sz")) - eps &&
-            (lit(1.0) + tau) *
-              (lit(1) + least(col("a.sz") - col("a.rk"), col("b.sz") - col("b.rk"))) >=
-              lit(tau) * (col("a.sz") + col("b.sz")) - eps)
-        .select(col("a.id").as("id_a"), col("b.id").as("id_b")).distinct()
-      t("cand join+distinct")(cand.count())
-      val fin = cand
-        .join(setsC.select(col("id").as("id_a"), col("shs").as("sa"),
-          col("sz").as("sza")), Seq("id_a"))
-        .join(setsC.select(col("id").as("id_b"), col("shs").as("sb"),
-          col("sz").as("szb")), Seq("id_b"))
-        .withColumn("inter", size(array_intersect(col("sa"), col("sb"))).cast("long"))
-        .withColumn("jaccard",
-          col("inter").cast("double") /
-            (col("sza") + col("szb") - col("inter")).cast("double"))
-        .filter(col("jaccard") >= tau)
-        .select(col("id_a"), col("id_b"), col("jaccard"))
-      t("verify")(fin.count())
-    }
-    if (what == "r16dc") {
-      // stage dissection of tfidfCosinePairs (round-16): raw 1-split scan
-      // vs id-spread input, same JVM
-      import graft.functions.TextAnalysis
-      import org.apache.spark.sql.graftext.CappedCheckpoint._
-      for (arm <- Seq("raw", "p2", "p4", "p8", "p16", "spread")) {
-        val docs0 = spark.read.parquet(s"$dir/documents.parquet")
-        val docs = arm match {
-          case "raw" => docs0
-          case "spread" => docs0.repartition(32, col("doc_id"))
-          case p => docs0.repartition(p.drop(1).toInt, col("doc_id"))
-        }
-        val tf = docs.select(col("doc_id"), explode(
-            TextAnalysis.allShingles(col("text"), 3)).as("token"))
-          .groupBy("doc_id", "token").agg(count(lit(1)).as("tf"))
-        t(s"$arm tf")(tf.count())
-        val dfreq = tf.groupBy("token").agg(count(lit(1)).as("df"))
-          .filter(col("df") <= 20)
-        t(s"$arm dfreq")(dfreq.count())
-        val post0 = tf.join(dfreq, Seq("token"))
-          .withColumn("wq", expr("(tf * 1000000L) div df"))
-          .select("token", "doc_id", "wq")
-        t(s"$arm post ckpt")({ val p = post0.localCheckpointCapped(); p.count() })
-        val post = post0.localCheckpointCapped()
-        val a = post.select(col("token"), col("doc_id").as("doc_a"), col("wq").as("wa"))
-        val b = post.select(col("token"), col("doc_id").as("doc_b"), col("wq").as("wb"))
-        val dots = a.join(b, Seq("token")).filter(col("doc_a") < col("doc_b"))
-          .groupBy("doc_a", "doc_b")
-          .agg(sum(expr("CAST(wa AS DECIMAL(38,0)) * wb")).as("dot"))
-        t(s"$arm dots")(dots.count())
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-        System.gc()
-      }
-    }
-    if (what == "r16scc") {
-      // doublingAfter A/B for strongComponentLabels (round-16): the
-      // result is the same SCC fixpoint at any setting; only round counts
-      // and per-round shapes change
-      val cust = spark.read.parquet(s"$dir/customer.parquet")
-      val n = cust.count()
-      val nodes = cust.select(col("c_custkey").as("id"))
-      val edges = spark.read.parquet(s"$dir/orders.parquet")
-        .filter(col("o_orderkey") % 10 === 0)
-        .select(col("o_custkey").as("source"),
-          (col("o_orderkey") % n).as("target"))
-      val g = graft.NetworkFrame(nodes, edges)
-      for (da <- args.drop(2).headOption.map(_.split(",").map(_.toInt).toSeq)
-             .getOrElse(Seq(24, 12, 8))) {
-        t(s"scc doublingAfter=$da")(
-          graft.GraphAlgorithms.strongComponentLabels(g, da).count())
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-        System.gc()
-      }
-    }
     if (what == "all" || what == "ivf") {
       val emb = spark.read.parquet(s"$dir/embeddings.parquet")
       val q = Similarity.ivfTopK(emb, "vec_id", "embedding", "label", 3)
