@@ -10,6 +10,14 @@ import org.apache.spark.sql.graftext.CappedCheckpoint._
   * so fixpoints run as driver-controlled loops over DataFrames with
   * `localCheckpoint()` per round to cut lineage (standard Spark graph
   * practice); per-round cost is one join shuffle + one aggregation shuffle.
+  *
+  * Two loops are shared:
+  *   - [[monotoneFixpoint]] drives the fixpoints whose state only moves one
+  *     way (component labels, SCC colorings, temporal arrivals): it owns the
+  *     convergence probe, the round cap that throws, and the
+  *     `[graft] <name> converged in N rounds` line;
+  *   - [[frontierBfs]] is the one frontier BFS, behind the single-source
+  *     distances and reachable sets and the multi-source distance table.
   */
 object GraphAlgorithms {
 
@@ -19,7 +27,8 @@ object GraphAlgorithms {
     * equivalent up to relabeling; networkframe.py:721-730).
     *
     * connection="weak" (or undirected frames) symmetrizes edges. Converges in
-    * O(diameter) rounds; each round localCheckpoints to keep lineage flat.
+    * O(log diameter) rounds; each round localCheckpoints to keep lineage
+    * flat, and a graph still changing after 200 rounds throws.
     * At 100 TB scale: edges pre-partitioned by source reuse the same
     * partitioning across rounds; AQE handles hub-node skew in the join.
     */
