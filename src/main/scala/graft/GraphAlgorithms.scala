@@ -199,7 +199,7 @@ object GraphAlgorithms {
   /** (row count, exact DECIMAL(38,0) sum of `c`) in one aggregate job — the
     * state [[monotoneFixpoint]] compares between rounds. Empty frames sum
     * as 0. The sum is `try_sum`, so an overflow is NULL under ANSI mode
-    * too (plain `sum` throws ARITHMETIC_OVERFLOW there); a NULL sum over a
+    * too (plain `sum` throws an out-of-range error there); a NULL sum over a
     * non-empty frame comes back as None — unusable, so the caller takes the
     * exact join probe that round instead of comparing ZERO == ZERO and
     * forging convergence.
@@ -219,8 +219,8 @@ object GraphAlgorithms {
     * (Double/Float/scaled Decimal): the probe casts to decimal(38,0), which
     * ROUNDS, so a pointwise decrease smaller than the rounding granularity
     * (2.4 -> 2.0, both cast to 2) would leave the sum stationary and forge
-    * convergence mid-fixpoint. Same gate as the MST driver-contraction path
-    * (truncate-and-collide hazard).
+    * convergence mid-fixpoint. The MST driver-contraction path shares the
+    * gate (its getLong reads would truncate and collide).
     */
   private def integralCol(df: DataFrame, c: String): Boolean =
     df.schema(c).dataType match {
@@ -495,7 +495,7 @@ object GraphAlgorithms {
     */
   def selectComponentFromNode(nf: NetworkFrame, nodeId: Any,
                               directed: Boolean = true): NetworkFrame = {
-    val reached = bfsReachable(nf, nodeId, directed, maxHops = Int.MaxValue)
+    val reached = bfsDistances(nf, nodeId, Int.MaxValue, directed).select("id")
     val n = nf.nodes.join(reached, Seq("id"), "left_semi")
     nf.copy(nodes = n, edges = induce(nf.edges, reached))
   }
@@ -506,15 +506,10 @@ object GraphAlgorithms {
   def kHopNeighborhood(nf: NetworkFrame, nodeId: Any, k: Int,
                        directed: Boolean = false): NetworkFrame = {
     require(k >= 0, "k must be non-negative")
-    val reached = bfsReachable(nf, nodeId, directed, maxHops = k)
+    val reached = bfsDistances(nf, nodeId, k, directed).select("id")
     val n = nf.nodes.join(reached, Seq("id"), "left_semi")
     nf.copy(nodes = n, edges = induce(nf.edges, reached))
   }
-
-  /** Single-source BFS: ids reachable within <= maxHops (seed at hop 0). */
-  private def bfsReachable(nf: NetworkFrame, nodeId: Any, directed: Boolean,
-                           maxHops: Int): DataFrame =
-    bfsDistances(nf, nodeId, maxHops, directed).select("id")
 
   /** Single-source hop distances: (id, dist) for every node within
     * <= maxDepth unweighted hops of `nodeId` (seed at 0) — the distance
@@ -2194,14 +2189,7 @@ object GraphAlgorithms {
         // column actually being integral — NetworkFrame ids are arbitrary
         // (string/decimal ids would cast to null -> NPE, or truncate and
         // collide); everything else takes the type-agnostic fixpoint
-        val idIsIntegral = ce.schema("a").dataType match {
-          case org.apache.spark.sql.types.ByteType
-             | org.apache.spark.sql.types.ShortType
-             | org.apache.spark.sql.types.IntegerType
-             | org.apache.spark.sql.types.LongType => true
-          case _ => false
-        }
-        val m: DataFrame = if (idIsIntegral && ceCount <= driverContractionCap) {
+        val m: DataFrame = if (integralCol(ce, "a") && ceCount <= driverContractionCap) {
           val pairs = ce.select(col("a").cast("long"), col("b").cast("long"))
             .collect().map(r => (r.getLong(0), r.getLong(1)))
           val parent = scala.collection.mutable.HashMap.empty[Long, Long]

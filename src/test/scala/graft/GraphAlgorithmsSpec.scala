@@ -131,8 +131,8 @@ class GraphAlgorithmsSpec extends AnyFunSuite with SparkFixture {
   test("monotoneProbe reports an overflowed sum as unusable in both ANSI modes") {
     // ids of at most 64 bits need more than 1e19 rows to overflow the
     // DECIMAL(38,0) sum, so the probe is driven directly: two 9e37 values
-    // sum past 1e38. Plain `sum` throws ARITHMETIC_OVERFLOW under ANSI
-    // mode (the Spark 4 default); the probe must return None instead, so
+    // sum past 1e38. Plain `sum` throws NUMERIC_VALUE_OUT_OF_RANGE under
+    // ANSI mode (the Spark 4 default); the probe must return None instead, so
     // the fixpoint takes the exact join probe that round
     val df = spark.range(2)
       .select(lit("9" + "0" * 37).cast("decimal(38,0)").as("v"))
