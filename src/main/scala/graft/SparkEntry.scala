@@ -49,12 +49,9 @@ object SparkEntry {
     * o_orderkey mod |customer| — a deterministic synthetic multigraph over
     * the customer id space (FIXTURES.md §B).
     */
-  // |customer| per sf dir, computed once per JVM (every query builds the graph)
-  private val custCount = scala.collection.concurrent.TrieMap.empty[String, Long]
-
   private def graph(s: SparkSession, dir: String): NetworkFrame = {
     val c = tbl(s, dir, "customer")
-    val n = custCount.getOrElseUpdate(dir, c.count())
+    val n = customerCount(dir, c)
     val nodes = c.select(col("c_custkey").as("id"), col("c_name"),
       col("c_nationkey"), col("c_acctbal"), col("c_mktsegment"))
     val edges = tbl(s, dir, "orders").select(
@@ -71,6 +68,12 @@ object SparkEntry {
     * actually touches nodes). Weight is the DECIMAL-cast event value, the
     * exact-arithmetic discipline.
     */
+  // |customer| per sf dir, computed once per JVM (every query builds the
+  // graph); by-name so a memo hit reads no customer table (each parquet
+  // read infers its schema with a Spark job)
+  private def customerCount(dir: String, customer: => DataFrame): Long =
+    Scratch.memoValue("cust_count", dir)(customer.count())
+
   private def mlEvents(s: SparkSession, dir: String): MultilayerNetworkFrame = {
     val e = tbl(s, dir, "events").select(
       col("user_id").cast("long").as("source"),
@@ -95,7 +98,7 @@ object SparkEntry {
   }
 
   /** Weak component labels of the sparse graph, derived ONCE per (JVM, sf
-    * dir) and materialized to parquet — the
+    * dir) and materialized to parquet ([[Scratch.memoTable]]) — the
     * q_components / q_n_components / q_label_components / q_largest_cc
     * family all consume the same fixpoint, and the API hands back a
     * reusable labels frame, so the harness reflects that reuse instead of
@@ -103,64 +106,29 @@ object SparkEntry {
     * so Bench's per-query block unpersist cannot invalidate it; on a real
     * cluster this is the labels table you'd persist in the warehouse.
     */
-  private val weakLabelsPath = scala.collection.concurrent.TrieMap.empty[String, String]
+  private def sparseLabels(s: SparkSession, dir: String): DataFrame =
+    Scratch.memoTable(s, "weak_labels", dir)(
+      GraphAlgorithms.componentLabels(sparse(s, dir), "weak"))
 
-  // scratch dirs for the CSV/JSON sink half of q_io_roundtrip, one per dir
-  private val ioDirs = scala.collection.concurrent.TrieMap.empty[String, String]
-  private val orcDirs = scala.collection.concurrent.TrieMap.empty[String, String]
-
-  /** Allocate a scratch directory for the per-(JVM, sf dir) materialized
-    * caches — see [[Scratch]] (shared with EventStream's stream staging).
-    */
-  private def scratchDir(s: SparkSession, prefix: String): String =
-    Scratch.dir(s, prefix)
-
-  /** Strong-component labels, cached per (JVM, sf dir) exactly like the
+  /** Strong-component labels, memoized per (JVM, sf dir) exactly like the
     * weak labels above — q_strong_components and q_condensation both
     * consume the same SCC fixpoint, and `condensationFromLabels` exists
     * precisely so callers reuse a precomputed labels frame.
     */
-  private val sccLabelsPath = scala.collection.concurrent.TrieMap.empty[String, String]
-
-  private def sccLabels(s: SparkSession, dir: String): DataFrame = {
-    val p = sccLabelsPath.getOrElseUpdate(dir, {
-      val out = scratchDir(s, "scc_labels_")
-      GraphAlgorithms.strongComponentLabels(sparse(s, dir))
-        .write.mode("overwrite").parquet(out)
-      out
-    })
-    s.read.parquet(p)
-  }
-
-  private def sparseLabels(s: SparkSession, dir: String): DataFrame = {
-    val p = weakLabelsPath.getOrElseUpdate(dir, {
-      val out = scratchDir(s, "weak_labels_")
-      GraphAlgorithms.componentLabels(sparse(s, dir), "weak")
-        .write.mode("overwrite").parquet(out)
-      out
-    })
-    s.read.parquet(p)
-  }
+  private def sccLabels(s: SparkSession, dir: String): DataFrame =
+    Scratch.memoTable(s, "scc_labels", dir)(
+      GraphAlgorithms.strongComponentLabels(sparse(s, dir)))
 
   /** The k=8, depth-12 multi-source BFS distance table of the sparse
     * graph, derived ONCE per (JVM, sf dir) and materialized to parquet —
     * q_closeness / q_harmonic / q_voronoi / q_eccentricity are four
     * aggregates of the SAME (seed, id, d) frame, and the API exposes
     * `*FromDistances` variants precisely so pipelines run the BFS once
-    * and fan out. Same pattern as `sparseLabels`: parquet (not cache) so
-    * per-query unpersist cannot invalidate it.
+    * and fan out. A [[Scratch.memoTable]], like `sparseLabels`.
     */
-  private val seedDistPath = scala.collection.concurrent.TrieMap.empty[String, String]
-
-  private def seedDists(s: SparkSession, dir: String): DataFrame = {
-    val p = seedDistPath.getOrElseUpdate(dir, {
-      val out = scratchDir(s, "seed_dists_")
-      GraphAlgorithms.multiSourceBfsDistances(sparse(s, dir), k = 8, maxDepth = 12)
-        .write.mode("overwrite").parquet(out)
-      out
-    })
-    s.read.parquet(p)
-  }
+  private def seedDists(s: SparkSession, dir: String): DataFrame =
+    Scratch.memoTable(s, "seed_dists", dir)(
+      GraphAlgorithms.multiSourceBfsDistances(sparse(s, dir), k = 8, maxDepth = 12))
 
   /** Spread a compute-heavy small scan across the session's shuffle
     * parallelism. Spark sizes scan splits by BYTES (maxPartitionBytes),
@@ -192,21 +160,12 @@ object SparkEntry {
     * stage shared by
     * q_minhash_sig / q_lsh_buckets / q_minhash_pairs / q_dedup_clusters,
     * and the API exposes `*FromSignatures` variants precisely so pipelines
-    * derive signatures once and fan out. Same pattern as `sparseLabels`:
-    * parquet (not cache) so per-query unpersist cannot invalidate it; on a
+    * derive signatures once and fan out. A [[Scratch.memoTable]]: on a
     * real cluster this is the signature table you'd keep in the warehouse.
     */
-  private val sigPath = scala.collection.concurrent.TrieMap.empty[String, String]
-
-  private def docSignatures(s: SparkSession, dir: String): DataFrame = {
-    val p = sigPath.getOrElseUpdate(dir, {
-      val out = scratchDir(s, "minhash_sig_")
-      Dedup.minhashSignatures(docs(s, dir), "doc_id", "text", 16, 3)
-        .write.mode("overwrite").parquet(out)
-      out
-    })
-    s.read.parquet(p)
-  }
+  private def docSignatures(s: SparkSession, dir: String): DataFrame =
+    Scratch.memoTable(s, "minhash_sig", dir)(
+      Dedup.minhashSignatures(docs(s, dir), "doc_id", "text", 16, 3))
   // embeddings deliberately NOT spread: quantization is cheap array
   // arithmetic (unlike shingling), and a round-16 A/B measured the spread
   // regressing q_ivfpq_search 12.9 -> 55.3 s and q_cell_neardup
@@ -221,14 +180,26 @@ object SparkEntry {
     * n^1.5 candidate scoring) is the expensive stage shared by
     * q_doc_clusters and q_doc_clusters_recall, and on a cluster this is
     * exactly the similarity-graph table a pipeline would keep in the
-    * warehouse beside the embeddings. Same pattern as `docSignatures` /
-    * `sparseLabels`: parquet (not cache) so per-query unpersist cannot
-    * invalidate it.
+    * warehouse beside the embeddings. A [[Scratch.memoTable]], like
+    * `docSignatures` / `sparseLabels`.
     */
-  private val knnPath = scala.collection.concurrent.TrieMap.empty[String, String]
+  private def docKnnGraph(s: SparkSession, dir: String): DataFrame =
+    Scratch.memoTable(s, "doc_knn", dir) {
+      val e = emb(s, dir)
+      val n = e.count()
+      if (useTwoLevelChannel(n)) {
+        val (pc, pf, mc, mf) = scaledTwoLevelPoint(n)
+        Similarity.mutualKnnGraphTwoLevel(e, "vec_id", "embedding",
+          k = 5, pCoarse = pc, pFine = pf, mCoarse = mc, mFine = mf)
+      } else {
+        val (np, ma) = scaledClusterPoint(n)
+        Similarity.mutualKnnGraphKmv(e, "vec_id", "embedding",
+          k = 5, nprobe = np, massign = ma)
+      }
+    }
 
-  /** Clear every per-(JVM, sf dir) memoized artifact registry, forcing the
-    * next consumer of each family to rebuild its materialized table. The
+  /** Clear every per-(JVM, sf dir) memoized artifact ([[Scratch.reset]]),
+    * forcing the next consumer of each kind to rebuild it. The
     * bench guard's SOLO re-runs call this before timing: a memo-backed
     * query re-run inside the same JVM otherwise measures a bare parquet
     * read (q_strong_components: 0.2 s vs its ~9 s first-consumer cost) —
@@ -239,19 +210,12 @@ object SparkEntry {
     * Old scratch dirs stay on disk until JVM-exit cleanup ([[Scratch]]);
     * a bench run resets at most a handful of times.
     */
-  private[graft] def resetMemoizedArtifacts(): Unit = {
-    custCount.clear(); weakLabelsPath.clear(); sccLabelsPath.clear()
-    seedDistPath.clear(); sigPath.clear(); knnPath.clear()
-    ioDirs.clear(); orcDirs.clear()
-  }
+  private[graft] def resetMemoizedArtifacts(): Unit = Scratch.reset()
 
-  /** Registry entries currently memoized — observable for the spec that
-    * pins [[resetMemoizedArtifacts]] actually clears state.
+  /** Artifacts currently memoized ([[Scratch.size]]) — observable for the
+    * spec that pins [[resetMemoizedArtifacts]] actually clears state.
     */
-  private[graft] def memoizedArtifactCount: Int =
-    custCount.size + weakLabelsPath.size + sccLabelsPath.size +
-      seedDistPath.size + sigPath.size + knnPath.size +
-      ioDirs.size + orcDirs.size
+  private[graft] def memoizedArtifactCount: Int = Scratch.size
 
   /** Auto-scaled clustering operating point (round 14). A FIXED
     * (nprobe, massign) decays as the sqrt(n) cell count outgrows it —
@@ -309,26 +273,6 @@ object SparkEntry {
     */
   private[graft] def scaledTwoLevelPoint(n: Long): (Int, Int, Int, Int) =
     (DocClusterProbe, math.round(24.0 * math.cbrt(n / 20164.0)).toInt, 2, 2)
-
-  private def docKnnGraph(s: SparkSession, dir: String): DataFrame = {
-    val p = knnPath.getOrElseUpdate(dir, {
-      val out = scratchDir(s, "doc_knn_")
-      val e = emb(s, dir)
-      val n = e.count()
-      val graph = if (useTwoLevelChannel(n)) {
-        val (pc, pf, mc, mf) = scaledTwoLevelPoint(n)
-        Similarity.mutualKnnGraphTwoLevel(e, "vec_id", "embedding",
-          k = 5, pCoarse = pc, pFine = pf, mCoarse = mc, mFine = mf)
-      } else {
-        val (np, ma) = scaledClusterPoint(n)
-        Similarity.mutualKnnGraphKmv(e, "vec_id", "embedding",
-          k = 5, nprobe = np, massign = ma)
-      }
-      graph.write.mode("overwrite").parquet(out)
-      out
-    })
-    s.read.parquet(p)
-  }
 
   /** Deterministic ~ExactAuditCap-vector stratum of the embeddings table
     * (vec_id % max(1, n div cap) == 0) — the bounded corpus the exact
@@ -441,7 +385,7 @@ SELECT id, c_name, c_nationkey FROM nodes UNION ALL SELECT s_suppkey + 1000000, 
 
     ("q_add_edges", (s, dir) => {
       val g = graph(s, dir)
-      val n = custCount.getOrElseUpdate(dir, tbl(s, dir, "customer").count())
+      val n = customerCount(dir, tbl(s, dir, "customer"))
       val extra = tbl(s, dir, "orders").filter(col("o_orderstatus") === "F")
         .select((col("o_orderkey") % n).as("source"), col("o_custkey").as("target"),
           col("o_totalprice").as("weight"))
@@ -453,7 +397,7 @@ SELECT source FROM edges UNION ALL SELECT o_orderkey % (SELECT count(*) FROM cus
 
     ("q_reindex_nodes", (s, dir) => {
       val g = graph(s, dir)
-      val n = custCount.getOrElseUpdate(dir, tbl(s, dir, "customer").count())
+      val n = customerCount(dir, tbl(s, dir, "customer"))
       g.reindexNodes(s.range(n + 5).toDF("id"))
         .nodes.select("id", "c_name").orderBy("id")
     },
@@ -2623,13 +2567,11 @@ ORDER BY 1, 2""")),
     // oracle aggregates the parquet originals, proving the non-parquet IO
     // paths preserve values end to end
     ("q_io_roundtrip", (s, dir) => {
-      val tmp = ioDirs.getOrElseUpdate(dir, {
-        val d = scratchDir(s, "io_")
+      val tmp = Scratch.memoDir(s, "io", dir) { d =>
         tbl(s, dir, "nation").write.mode("overwrite")
           .option("header", "true").csv(s"$d/nation_csv")
         tbl(s, dir, "region").write.mode("overwrite").json(s"$d/region_json")
-        d
-      })
+      }
       val n = s.read.option("header", "true").option("inferSchema", "true")
         .csv(s"$tmp/nation_csv")
       val r = s.read.json(s"$tmp/region_json")
@@ -2647,11 +2589,9 @@ FROM nation n JOIN region r ON n.n_regionkey = r.r_regionkey GROUP BY 1 ORDER BY
     // pushdown/pruning machinery as the parquet scans; the oracle reads the
     // original table, so the round-trip must be lossless)
     ("q_io_orc", (s, dir) => {
-      val tmp = orcDirs.getOrElseUpdate(dir, {
-        val d = scratchDir(s, "orc_")
+      val tmp = Scratch.memoDir(s, "orc", dir) { d =>
         tbl(s, dir, "supplier").write.mode("overwrite").orc(s"$d/supplier_orc")
-        d
-      })
+      }
       s.read.orc(s"$tmp/supplier_orc")
         .groupBy("s_nationkey")
         .agg(count(lit(1)).as("n_suppliers"),
@@ -4281,7 +4221,7 @@ FROM rk GROUP BY 1 ORDER BY 1""")),
     // time-respecting reachability over the FULL order graph (edge time =
     // order date; a path must never go back in time)
     ("q_temporal_reach", (s, dir) => {
-      val n = custCount.getOrElseUpdate(dir, tbl(s, dir, "customer").count())
+      val n = customerCount(dir, tbl(s, dir, "customer"))
       val te = tbl(s, dir, "orders").select(
         col("o_custkey").as("source"), (col("o_orderkey") % n).as("target"),
         datediff(to_date(col("o_orderdate")), to_date(lit("1995-01-01"))).as("t"))
@@ -4714,7 +4654,7 @@ SELECT grp, CAST(rk AS BIGINT) AS rk, token, lift_ppm FROM r WHERE rk <= 5 ORDER
     // graph snapshot diff: edge churn between the pre/post-1998 halves of
     // the order stream (added / removed / persistent + stability ppm)
     ("q_graph_diff", (s, dir) => {
-      val n = custCount.getOrElseUpdate(dir, tbl(s, dir, "customer").count())
+      val n = customerCount(dir, tbl(s, dir, "customer"))
       val e = tbl(s, dir, "orders").select(
         col("o_custkey").as("source"), (col("o_orderkey") % n).as("target"),
         col("o_orderdate"))

@@ -46,14 +46,15 @@ object DocStream {
                          shingleLen: Int = 3, minAgree: Double = 0.5,
                          queryName: String = "admission_stream"): DataFrame = {
     val schema = spark.read.parquet(parquetPath).schema
-    val src = spark.readStream.schema(schema).parquet(stageDir(parquetPath))
+    val src = spark.readStream.schema(schema)
+      .parquet(EventStream.stageDir(spark, parquetPath))
       .filter(batchFilter)
     def gate(batch: DataFrame): DataFrame =
       Dedup.dedupAgainstCorpus(batch, idCol, textCol, corpusSig,
         numHashes, bands, shingleLen, minAgree)
-    val outDir = java.nio.file.Files
-      .createTempDirectory("graft_admission_").toString
-    cleanupAtExit(spark, outDir)
+    // sink and checkpoint live in cluster-visible Scratch dirs, deleted at
+    // JVM exit (not eagerly: the returned DataFrame reads the sink lazily)
+    val outDir = graft.Scratch.dir(spark, "admission_")
     // seed the sink with the gate's schema (zero-row plan) so a run whose
     // batches all admit nothing still reads back as an empty table
     gate(spark.read.parquet(parquetPath).limit(0))
@@ -62,9 +63,7 @@ object DocStream {
     // subdirectory, so a failed/retried batch replaces its partial output
     // instead of double-appending — paired with an explicit checkpoint so
     // a restart resumes at the right batch rather than re-ingesting
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft_admission_ckpt_").toString
-    cleanupAtExit(spark, ckpt)
+    val ckpt = graft.Scratch.dir(spark, "admission_ckpt_")
     val q = src.writeStream
       .option("checkpointLocation", ckpt)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -76,17 +75,4 @@ object DocStream {
     finally q.stop()
     spark.read.parquet(s"$outDir/b_*")
   }
-
-  /** Temp sink/checkpoint dirs are deleted at JVM exit via the Scratch
-    * registry — ONE static shutdown hook draining a concurrent dir set,
-    * not a hook per stream run (a long-lived service calling this per
-    * corpus would otherwise accumulate hook threads). The returned
-    * DataFrame reads the sink lazily, so deleting eagerly would break the
-    * caller.
-    */
-  private def cleanupAtExit(spark: SparkSession, dir: String): Unit =
-    graft.Scratch.register(dir, spark.sparkContext.hadoopConfiguration)
-
-  private def stageDir(parquetPath: String): String =
-    EventStream.stageDir(parquetPath)
 }

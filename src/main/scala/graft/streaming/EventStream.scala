@@ -372,7 +372,7 @@ object EventStream {
                                 delay: String = "10 minutes",
                                 queryName: String = "interval_join_left"): DataFrame = {
     val schema = spark.read.parquet(parquetPath).schema
-    val src = spark.readStream.schema(schema).parquet(stageDir(parquetPath))
+    val src = spark.readStream.schema(schema).parquet(stageDir(spark, parquetPath))
     val joined = intervalJoinLeftOuter(withEventWatermark(src, delay),
       leftType, rightType, within)
     val q = joined.writeStream.outputMode("append").format("memory")
@@ -390,7 +390,7 @@ object EventStream {
                             delay: String = "10 minutes",
                             queryName: String = "interval_join"): DataFrame = {
     val schema = spark.read.parquet(parquetPath).schema
-    val src = spark.readStream.schema(schema).parquet(stageDir(parquetPath))
+    val src = spark.readStream.schema(schema).parquet(stageDir(spark, parquetPath))
     val joined = intervalJoin(withEventWatermark(src, delay), leftType,
       rightType, within)
     val q = joined.writeStream.outputMode("append").format("memory")
@@ -444,7 +444,7 @@ object EventStream {
   def runRunningTotalsStream(spark: SparkSession, parquetPath: String,
                              queryName: String = "running_totals"): DataFrame = {
     val schema = spark.read.parquet(parquetPath).schema
-    val src = spark.readStream.schema(schema).parquet(stageDir(parquetPath))
+    val src = spark.readStream.schema(schema).parquet(stageDir(spark, parquetPath))
     val q = runningTotals(src).writeStream.outputMode("append")
       .format("memory").queryName(queryName).start()
     drainAndDetach(spark, q, queryName)
@@ -459,7 +459,7 @@ object EventStream {
                      delay: String = "10 minutes",
                      queryName: String = "edges_stream"): DataFrame = {
     val schema = spark.read.parquet(parquetPath).schema
-    val srcPath = stageDir(parquetPath)
+    val srcPath = stageDir(spark, parquetPath)
     val src = spark.readStream.schema(schema).parquet(srcPath)
     val agg = effectiveEdgesWindowed(withEventWatermark(src, delay), windowLen)
     val q = agg.writeStream.outputMode("append").format("memory")
@@ -507,7 +507,7 @@ object EventStream {
                        delay: String = "10 minutes",
                        queryName: String = "sliding_stream"): DataFrame = {
     val schema = spark.read.parquet(parquetPath).schema
-    val src = spark.readStream.schema(schema).parquet(stageDir(parquetPath))
+    val src = spark.readStream.schema(schema).parquet(stageDir(spark, parquetPath))
     val agg = slidingTypeCounts(withEventWatermark(src, delay), duration, slide)
     val q = agg.writeStream.outputMode("append").format("memory")
       .queryName(queryName).start()
@@ -524,7 +524,7 @@ object EventStream {
                      keys: Seq[String], delay: String = "10 minutes",
                      queryName: String = "dedup_stream"): DataFrame = {
     val schema = spark.read.parquet(parquetPath).schema
-    val src = spark.readStream.schema(schema).parquet(stageDir(parquetPath))
+    val src = spark.readStream.schema(schema).parquet(stageDir(spark, parquetPath))
     val d = streamingDedup(src, keys, delay)
       .select(keys.map(col): _*)
     val q = d.writeStream.outputMode("append").format("memory")
@@ -544,7 +544,7 @@ object EventStream {
                         dim: DataFrame, dimKey: String, attrCol: String,
                         queryName: String = "enriched_stream"): DataFrame = {
     val schema = spark.read.parquet(parquetPath).schema
-    val src = spark.readStream.schema(schema).parquet(stageDir(parquetPath))
+    val src = spark.readStream.schema(schema).parquet(stageDir(spark, parquetPath))
     val agg = src.join(broadcast(dim), src("user_id") === dim(dimKey))
       .groupBy(col(attrCol), col("event_type"))
       .agg(count(lit(1)).as("n"),
@@ -579,15 +579,19 @@ object EventStream {
   }
 
   // the file-stream source requires a DIRECTORY; stage single files into a
-  // scratch dir via symlink
-  private[streaming] def stageDir(parquetPath: String): String = {
+  // scratch dir via symlink, deleted at JVM exit (the delete removes the
+  // link, never its target)
+  private[graft] def stageDir(spark: SparkSession,
+                              parquetPath: String): String = {
     val f = new java.io.File(parquetPath)
     if (f.isDirectory) parquetPath
     else {
       val d = java.nio.file.Files.createTempDirectory("graft_stream_")
       java.nio.file.Files.createSymbolicLink(
         d.resolve(f.getName), f.toPath.toAbsolutePath)
-      d.toString
+      val out = d.toUri.toString
+      Scratch.register(out, spark.sparkContext.hadoopConfiguration)
+      out
     }
   }
 
@@ -599,7 +603,7 @@ object EventStream {
                        windowLen: String = "1 hour",
                        queryName: String = "event_stream_out"): DataFrame = {
     val schema = spark.read.parquet(parquetPath).schema
-    val srcPath = stageDir(parquetPath)
+    val srcPath = stageDir(spark, parquetPath)
     val src = spark.readStream.schema(schema).parquet(srcPath)
     val agg = windowedTypeCounts(withEventWatermark(src), windowLen)
     val q = agg.writeStream
@@ -624,7 +628,7 @@ object EventStream {
                        delay: String = "10 minutes",
                        queryName: String = "stream_uniques"): DataFrame = {
     val schema = spark.read.parquet(parquetPath).schema
-    val srcPath = stageDir(parquetPath)
+    val srcPath = stageDir(spark, parquetPath)
     val src = spark.readStream.schema(schema).parquet(srcPath)
     val dedup = withEventWatermark(src, delay)
       .select(window(col("ts"), windowLen).as("w"), col("user_id"))
@@ -678,8 +682,8 @@ object EventStream {
       .select(col("user_id").cast("long").as("source"),
         (col("event_id") % targetMod).cast("long").as("target"),
         col("event_id").cast("long").as("event_id"))
-    val stage = stageChunks(spark,
-      s"cc|$parquetPath|$chunks|$everyNth|$targetMod",
+    val stage = stageChunks(spark, parquetPath,
+      s"cc|$chunks|$everyNth|$targetMod",
       edges, expr(s"(event_id DIV $everyNth) % $chunks"), chunks)
     val src = spark.readStream.schema(edges.schema)
       .option("maxFilesPerTrigger", filesPerTrigger.toString).parquet(stage)
@@ -736,7 +740,7 @@ object EventStream {
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     val refTotal = refRows.values.sum
     val refPpm = refRows.map { case (b, c) => b -> c * 1000000L / refTotal }
-    val stage = stageChunks(spark, s"drift|$parquetPath|$chunks",
+    val stage = stageChunks(spark, parquetPath, s"drift|$chunks",
       docs, col("doc_id") % chunks, chunks)
     val src = spark.readStream.schema(docs.schema)
       .option("maxFilesPerTrigger", "1").parquet(stage)
@@ -771,28 +775,22 @@ object EventStream {
     results.toSeq.toDF("chunk", "n_docs", "tv_ppm")
   }
 
-  /** Per-(JVM, source, params) cache of staged chunk directories — bench
-    * warmup plus timed runs of q_drift_stream/q_cc_stream reuse one staging
-    * pass instead of rewriting the corpus on every execution (the
-    * ioDirs/orcDirs discipline from SparkEntry).
-    */
-  private val chunkStageDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   /** Stage `df` as `chunks` deterministic single-file parquet chunks under a
     * cluster-visible [[Scratch]] directory (registered for JVM-exit delete,
-    * so repeated runs leak nothing). Rows go to chunk `i` where
+    * so repeated runs leak nothing), memoized per (JVM, source, params) by
+    * [[Scratch.memoDir]] — bench warmup plus timed runs of
+    * q_drift_stream/q_cc_stream reuse one staging pass instead of
+    * rewriting the corpus on every execution. Rows go to chunk `i` where
     * `chunkIdx === i`; part-file resolution and renames go through the
     * Hadoop FileSystem of the scratch scheme, so staging works identically
     * off local mode (Spark writes and the file-stream source see the same
     * FS). Chunk files are written in index order with maxFilesPerTrigger=1
     * consumption in mind: one staged file per trigger.
     */
-  private def stageChunks(spark: SparkSession, key: String, df: DataFrame,
-                          chunkIdx: org.apache.spark.sql.Column,
+  private def stageChunks(spark: SparkSession, source: String, params: String,
+                          df: DataFrame, chunkIdx: org.apache.spark.sql.Column,
                           chunks: Int): String =
-    chunkStageDirs.getOrElseUpdate(key, {
-      val out = Scratch.dir(spark, "stream_stage_")
+    Scratch.memoDir(spark, "stream_stage", source, params) { out =>
       val outPath = new org.apache.hadoop.fs.Path(out)
       val fs = outPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
       (0 until chunks).foreach { i =>
@@ -804,8 +802,7 @@ object EventStream {
         fs.rename(part, new org.apache.hadoop.fs.Path(outPath, f"chunk_$i%04d.parquet"))
         fs.delete(build, true)
       }
-      out
-    })
+    }
 
   /** Production-mode streaming pass: APPEND output with watermark-evicted
     * state. Unlike `runStreamingOnce` (complete mode: unbounded state, fine
@@ -825,7 +822,7 @@ object EventStream {
                          delay: String = "10 minutes",
                          queryName: String = "event_stream_append"): DataFrame = {
     val schema = spark.read.parquet(parquetPath).schema
-    val srcPath = stageDir(parquetPath)
+    val srcPath = stageDir(spark, parquetPath)
     val src = spark.readStream.schema(schema).parquet(srcPath)
     val agg = windowedTypeCounts(withEventWatermark(src, delay), windowLen)
     val q = agg.writeStream

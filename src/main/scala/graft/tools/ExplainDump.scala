@@ -1,5 +1,6 @@
 package graft
 
+import scala.util.control.NonFatal
 import org.apache.spark.sql.SparkSession
 
 /** Optimization-round evidence harness: for each named gated query, write
@@ -45,7 +46,7 @@ object ExplainDump {
     // same rationale as Bench's warmup (the first timed query otherwise
     // carries ~5-10 s of warmup and reads as a fake regression)
     SparkEntry.queries.get("q_degrees").foreach { fn =>
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => () }
+      try { fn(spark, sfDir).count() } catch { case NonFatal(_) => () }
       reclaim()
     }
     names.foreach { name =>
@@ -73,7 +74,7 @@ object ExplainDump {
             } finally w.close()
             System.err.println(f"[explain] $name%-24s $sec%8.2f s -> $f")
           } catch {
-            case e: Throwable =>
+            case NonFatal(e) =>
               System.err.println(s"[explain] $name FAILED: ${e.getMessage}")
           } finally spark.sparkContext.setJobDescription(null)
       }

@@ -272,6 +272,23 @@ class Round14Spec extends AnyFunSuite with SparkFixture {
       "q_strong_components should have memoized its labels table")
     SparkEntry.resetMemoizedArtifacts()
     assert(SparkEntry.memoizedArtifactCount == 0)
+    // stream staging is a memoized artifact too: a reset must clear it
+    assert(SparkEntry.queries("q_drift_stream")(spark, SF).count() >= 0)
+    assert(SparkEntry.memoizedArtifactCount > 0,
+      "q_drift_stream should have memoized its staged chunks")
+    SparkEntry.resetMemoizedArtifacts()
+    assert(SparkEntry.memoizedArtifactCount == 0)
+  }
+
+  test("stream staging dirs are deleted at exit without following the link") {
+    val target = new java.io.File(s"$SF/events.parquet")
+    val stage = graft.streaming.EventStream.stageDir(spark, target.getPath)
+    assert(Scratch.isRegistered(stage))
+    val dir = java.nio.file.Paths.get(new java.net.URI(stage))
+    assert(java.nio.file.Files.isSymbolicLink(dir.resolve(target.getName)))
+    Scratch.delete(stage, spark.sparkContext.hadoopConfiguration)
+    assert(!java.nio.file.Files.exists(dir))
+    assert(target.isFile, "deleting the staging dir removed the staged file")
   }
 
   // ---------------- Borůvka contraction: driver gate == distributed ------
