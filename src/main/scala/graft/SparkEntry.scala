@@ -45,6 +45,12 @@ object SparkEntry {
       case _ => unix_micros(col("ts").cast("timestamp")) * lit(1000L)
     }
 
+  // |customer| per sf dir, computed once per JVM (every query builds the
+  // graph); by-name so a memo hit reads no customer table (each parquet
+  // read infers its schema with a Spark job)
+  private def customerCount(dir: String, customer: => DataFrame): Long =
+    Scratch.memoValue("cust_count", dir)(customer.count())
+
   /** Customer graph: nodes = customer, edges = orders with target derived as
     * o_orderkey mod |customer| — a deterministic synthetic multigraph over
     * the customer id space (FIXTURES.md §B).
@@ -68,12 +74,6 @@ object SparkEntry {
     * actually touches nodes). Weight is the DECIMAL-cast event value, the
     * exact-arithmetic discipline.
     */
-  // |customer| per sf dir, computed once per JVM (every query builds the
-  // graph); by-name so a memo hit reads no customer table (each parquet
-  // read infers its schema with a Spark job)
-  private def customerCount(dir: String, customer: => DataFrame): Long =
-    Scratch.memoValue("cust_count", dir)(customer.count())
-
   private def mlEvents(s: SparkSession, dir: String): MultilayerNetworkFrame = {
     val e = tbl(s, dir, "events").select(
       col("user_id").cast("long").as("source"),
